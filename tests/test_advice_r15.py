@@ -1,9 +1,10 @@
 """Round-15 ADVICE regressions — one test per advisor finding.
 
-1. ``table_file_bytes``'s os.walk fast path must skip Hadoop marker
-   files (``_SUCCESS``, ``.part-*.crc``) exactly like the Hadoop
-   ChecksumFileSystem listing it replaced, so directory-shaped tables
-   report data bytes only.
+1. ``table_file_bytes`` must count what Spark's reader lists: both the
+   os.walk fast path and the Hadoop listing fallback skip marker files
+   (``_SUCCESS``, ``.part-*.crc``) and ``_``/``.`` directories (a
+   crashed write's ``_temporary/``), and keep ``=``-named partition
+   directories, so directory-shaped tables report data bytes only.
 (The asof NULL-left-pred carry fix is pinned in
 tests/test_asof_same_scan.py::test_same_scan_null_left_pred_carries.)
 """
@@ -45,3 +46,31 @@ def test_table_file_bytes_dir_amplification_counts_data_only(tmp_path):
     (tdir / "part-00000.snappy.parquet").write_bytes(b"x" * 100)
     (tdir / "_SUCCESS").write_bytes(b"")
     assert table_file_bytes(None, str(tmp_path) + "@x10", name) == 1000
+
+
+def _partitioned_table_with_debris(tmp_path) -> int:
+    """A directory table with partition dirs and a crashed write's
+    leftovers; returns its data bytes."""
+    tdir = tmp_path / "ptable.parquet"
+    for part, size in (("year=2020", 100), ("_flag=1", 40)):
+        (tdir / part).mkdir(parents=True)
+        (tdir / part / "part-00000.snappy.parquet").write_bytes(b"x" * size)
+    # an aborted job's attempt dir, a hidden dir and a marker file
+    tmp = tdir / "_temporary" / "0" / "_temporary" / "attempt_0"
+    tmp.mkdir(parents=True)
+    (tmp / "part-00000.snappy.parquet").write_bytes(b"t" * 7000)
+    (tdir / ".staging").mkdir()
+    (tdir / ".staging" / "part-00001.snappy.parquet").write_bytes(b"s" * 900)
+    (tdir / "year=2020" / "_SUCCESS").write_bytes(b"")
+    return 140
+
+
+def test_table_file_bytes_prunes_hidden_dirs_keeps_partitions(tmp_path):
+    want = _partitioned_table_with_debris(tmp_path)
+    assert table_file_bytes(None, str(tmp_path), "ptable") == want
+
+
+def test_table_file_bytes_hadoop_listing_matches_local_walk(spark, tmp_path):
+    # a file: URI is not an os path, so this takes the Hadoop listing
+    want = _partitioned_table_with_debris(tmp_path)
+    assert table_file_bytes(spark, f"file:{tmp_path}", "ptable") == want

@@ -4,6 +4,7 @@ assertions for the scale posture (broadcasts, pushdown)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -602,22 +603,75 @@ def test_capped_bucket_pairs_bounded_and_deterministic(spark):
     assert again == got
 
 
-def test_jaccard_broadcast_gate_paths_identical(spark, monkeypatch):
-    """The size-gated verify-index broadcast is a pure physical-plan
-    choice: forcing the gate OFF (the >64MB corpus fallback the @x1000
-    sweep runs) must produce the exact same pair set and scores as the
-    broadcast path."""
-    from weather_etl_pipeline_spark.operators import dedup as d
+def test_jaccard_verify_cuts_on_exact_ratio(spark):
+    """The shared verify rule cuts on the EXACT ratio, as every DuckDB
+    oracle does: |A∩B| = 500,000 over |A∪B| = 1,000,001 is 0.4999995,
+    which rounds to 0.5 but lies under the 0.5 cut, so the pair is
+    rejected; a pair exactly at the cut is kept."""
+    from weather_etl_pipeline_spark.operators.dedup import _keep_jaccard
 
+    scored = spark.sql(
+        """
+        SELECT 1L AS doc_a, 2L AS doc_b,
+               sequence(0L, 749999L) AS _xa,
+               sequence(250000L, 1000000L) AS _xb
+        UNION ALL
+        SELECT 3L, 4L, array(1L, 2L), array(1L, 2L, 3L, 4L)
+        """
+    )
+    got = {tuple(r) for r in _keep_jaccard(scored).collect()}
+    assert got == {(3, 4, 0.5)}
+
+
+# (query, gate): every size gate a registry query reads, each forced to
+# the branch the sf0.01 fixture does not take by default
+_GATE_CASES = [
+    ("dedup_jaccard_pairs", "broadcast"),
+    ("dedup_jaccard_pairs", "cache"),
+    ("dedup_minhash_lsh", "broadcast"),
+    ("dedup_minhash_lsh", "cache"),
+    ("q3_shipping_priority", "broadcast"),
+]
+
+
+@pytest.mark.parametrize("query,gate", _GATE_CASES)
+def test_size_gate_branches_identical(spark, monkeypatch, query, gate):
+    """Each size gate is a pure physical-plan choice. Forcing its other
+    branch — broadcast off through catalog.BROADCAST_MAX_BYTES = 0 (the
+    >64MB fallback), cache on through the family's *_CACHE_MIN_BYTES = 0
+    (the @x10+ branch) — must produce the exact same rows, and the plan
+    must show that the branch flipped: the broadcast hint in the
+    analyzed plan, InMemoryRelation once cached data is substituted."""
+    from weather_etl_pipeline_spark import catalog
+    from weather_etl_pipeline_spark.operators import dedup as d
+    from weather_etl_pipeline_spark.registry import load_all
+
+    fn = load_all()[query].fn
     sf = "/root/testdata/sf0.01"
-    fast = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in dedup_jaccard_pairs(spark, sf).collect()
-    }
-    monkeypatch.setattr(d, "_JACCARD_BC_MAX_BYTES", 0)
-    slow = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in dedup_jaccard_pairs(spark, sf).collect()
-    }
-    assert fast == slow
-    assert fast, "vacuous equality — no pairs at sf0.01"
+
+    def run():
+        spark.catalog.clearCache()
+        df = fn(spark, sf)
+        qe = df._jdf.queryExecution()
+        markers = {
+            "broadcast": "strategy=broadcast" in qe.analyzed().toString(),
+            "cache": "InMemoryRelation" in qe.withCachedData().toString(),
+        }
+        return sorted(tuple(r) for r in df.collect()), markers
+
+    base_rows, base = run()
+    if gate == "broadcast":
+        monkeypatch.setattr(catalog, "BROADCAST_MAX_BYTES", 0)
+    elif query == "dedup_jaccard_pairs":
+        monkeypatch.setattr(d, "_JACCARD_CACHE_MIN_BYTES", 0)
+    else:
+        monkeypatch.setattr(d, "_MINHASH_CACHE_MIN_BYTES", 0)
+    try:
+        rows, forced = run()
+    finally:
+        spark.catalog.clearCache()
+    assert rows == base_rows
+    assert base_rows, "vacuous equality — no rows at sf0.01"
+    # default branches at sf0.01: broadcast on, cache off
+    assert base == {"broadcast": True, "cache": False}
+    assert forced == {**base, gate: not base[gate]}

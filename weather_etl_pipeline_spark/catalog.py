@@ -327,41 +327,59 @@ def oracle_knuth_hash(expr: str) -> str:
     return f"(({expr} * {KNUTH}) % {KNUTH_MOD})"
 
 
+# Broadcast gate for the size-gated join hints (dedup verify arrays,
+# q3's filtered cust⋈orders side): on-disk bytes of the gating table
+# under which the built relation fits an executor comfortably (the
+# in-memory form is ~2-4x the raw bytes). Past it the hint disappears
+# and AQE keeps the runtime strategy choice.
+BROADCAST_MAX_BYTES = 64 * 1024 * 1024
+
+
+def _hidden(name: str) -> bool:
+    """Spark's listing filter (InMemoryFileIndex.shouldFilterOutPathName):
+    ``.``/``_`` names are not data — markers, ``.crc`` checksums, a
+    crashed write's ``_temporary/`` — except ``=``-named partition
+    directories."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def table_file_bytes(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """On-disk bytes of a test table (file metadata, no scan) — the
+    """On-disk data bytes of a test table (file metadata, no scan) — the
     driver-side size signal for plan gates like the jaccard
     verify-broadcast. Honors ``@xN`` amplification (replicated listings
-    scan N× the bytes).
+    scan N× the bytes). Counts what Spark's reader lists (_hidden).
 
-    Local paths stat directly (round 14): the recursive py4j Hadoop
-    listing cost 30-60 ms of driver latency per call — real time inside
-    every gated query's plan construction — where os.walk over the same
-    files is microseconds and returns the identical byte total. Paths
-    the driver can't stat (remote schemes) keep the Hadoop listing."""
+    Local paths stat directly: the recursive py4j Hadoop listing cost
+    30-60 ms of driver latency per call — real time inside every gated
+    query's plan construction — where os.walk over the same files is
+    microseconds. Paths the driver can't stat (remote schemes) keep the
+    Hadoop listing."""
     base, replication = _resolve_sf_dir(sf_dir, name)
     path = os.path.join(base, f"{name}.parquet")
     if os.path.isfile(path):
         return os.path.getsize(path) * replication
     if os.path.isdir(path):
         total = 0
-        for dirpath, _dirnames, files in os.walk(path):
-            for f in files:
-                # match the Hadoop listing's hiddenFileFilter: Spark's
-                # own readers skip _SUCCESS/_committed markers and .crc
-                # checksum files, so counting them here would inflate
-                # directory-shaped tables vs the py4j path this
-                # replaced (round-15 ADVICE fix)
-                if f.startswith((".", "_")):
-                    continue
-                total += os.path.getsize(os.path.join(dirpath, f))
+        for dirpath, dirnames, files in os.walk(path):
+            dirnames[:] = [d for d in dirnames if not _hidden(d)]
+            total += sum(
+                os.path.getsize(os.path.join(dirpath, f))
+                for f in files
+                if not _hidden(f)
+            )
         return total * replication
     from .sources.fs import _fs_and_path
 
     fs, root = _fs_and_path(spark, path)
+    root_len = len(fs.makeQualified(root).toUri().getPath().rstrip("/"))
     total = 0
     it = fs.listFiles(root, True)
     while it.hasNext():
-        total += int(it.next().getLen())
+        st = it.next()
+        # every path component below the table root, file name included
+        below = st.getPath().toUri().getPath()[root_len:].split("/")
+        if not any(_hidden(n) for n in below):
+            total += int(st.getLen())
     return total * replication
 
 

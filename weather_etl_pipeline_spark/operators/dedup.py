@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import catalog
 from ..catalog import (
     cap_per_group,
     knuth_hash,
@@ -40,7 +41,7 @@ from ..catalog import (
     spread_to_cores,
     table_file_bytes,
 )
-from ..functions.exact import hround, spark_hround
+from ..functions.exact import spark_hround
 from ..registry import register
 
 # --- exact dedup: canonical row per content ----------------------------------
@@ -87,6 +88,186 @@ def dedup_exact_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- the near-dup pipeline every family shares -------------------------------
+# Jaccard, MinHash and SimHash dedup are one algorithm: collapse exact
+# copies (_collapse_exact), form candidate pairs from capped buckets
+# (_capped_bucket_pairs), join both sides' per-doc sidecars back in
+# (_join_sides) and verify. A family supplies only how it hashes tokens
+# into bucket keys and sidecars, and which score it keeps
+# (_keep_jaccard or _hamming).
+
+# Per-bucket membership cap for every banded candidate structure
+# (minhash bands, simhash chunks) — same role as _JACCARD_POSTING_CAP:
+# bounds pair-gen at cells × CAP² regardless of duplicate multiplicity.
+_LSH_BUCKET_CAP = 64
+# minhash-family verify cut on the exact shingle-set jaccard
+_MH_VERIFY_T = 0.5
+
+
+def _collapse_exact(
+    docs: DataFrame, carry: tuple[str, ...] = ()
+) -> tuple[DataFrame, DataFrame]:
+    """Exact-duplicate collapse in front of every near-dup structure:
+    (reps, star_edges) where ``reps`` keeps ONE row per distinct text
+    (min doc_id survivor, with the ``carry`` columns — the jaccard
+    family's (lang, source) blocking keys) and ``star_edges`` is
+    (doc_a=rep, doc_b=member) for every other member — a LINEAR-size
+    certificate of the full exact-dup relation (the member clique is
+    its transitive closure). Star edges span blocks deliberately:
+    identical text is a duplicate whichever block each copy was filed
+    under.
+
+    Why this is load-bearing for recall, not just perf: exact twins
+    have identical signatures (and token sets), so they occupy the same
+    ordered prefix of EVERY capped bucket or posting list they appear
+    in — twins past the cap would emit zero candidate pairs and
+    silently escape dedup, and they'd crowd genuinely-distinct
+    near-dups out of the bucket prefix besides. Collapsing first makes
+    exact-dup recall exact at ANY multiplicity (every member is one
+    star edge) and leaves the caps to bound only genuinely-distinct
+    co-bucketed texts. Cost: the same one-shuffle text exchange
+    dedup_exact_canonical already pays.
+    """
+    # all three windows share the ONE partitionBy(text) exchange (the
+    # (text, doc_id) window's distribution is satisfied by hash(text)).
+    # Row_numbers, not equality-with-min filters, make the outputs
+    # duplication-proof: replicated input ROWS (same doc_id n times —
+    # @xN amplification, ingest double-writes) yield exactly one rep
+    # row per text and one star edge per member, never n copies (the
+    # dup² verify blowup the @x1000 sweep caught). Ordering _rn by the
+    # carry columns after doc_id makes the surviving rep row's block
+    # deterministic; _cp's partition holds replicas of one doc_id only,
+    # so any order pins one edge. NULL text is UNKNOWN, not a duplicate
+    # class: the window would otherwise emit "identical text" star
+    # edges between documents whose text is missing. One selectExpr:
+    # the Column-API form cost ~0.3s of py4j round trips per call.
+    cols = ["doc_id", *carry, "text"]
+    marked = (
+        docs.select(*cols)
+        .filter("text IS NOT NULL")
+        .selectExpr(
+            *cols,
+            "min(doc_id) OVER (PARTITION BY text) AS _rep",
+            "row_number() OVER (PARTITION BY text ORDER BY"
+            f" {', '.join(['doc_id', *carry])}) AS _rn",
+            "row_number() OVER (PARTITION BY text, doc_id ORDER BY"
+            f" {', '.join(carry) or 'doc_id'}) AS _cp",
+        )
+    )
+    reps = marked.filter("_rn = 1").select(*cols)
+    edges = marked.filter("_cp = 1 AND doc_id != _rep").selectExpr(
+        "_rep AS doc_a", "doc_id AS doc_b"
+    )
+    return reps, edges
+
+
+# oracle CTE fragment mirroring _collapse_exact verbatim (row_numbers,
+# not equality-with-min, so replicated rows can't duplicate outputs):
+# ``docs`` = one row per distinct text (min doc_id), ``star_edges`` =
+# one (doc_a=rep, doc_b=member) edge per member
+_COLLAPSE_CTE = """marked AS (
+  SELECT doc_id, text,
+         MIN(doc_id) OVER (PARTITION BY text) AS rep,
+         ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id) AS rn,
+         ROW_NUMBER() OVER (PARTITION BY text, doc_id
+                            ORDER BY doc_id) AS cp
+  FROM documents
+  WHERE text IS NOT NULL
+),
+docs AS (SELECT doc_id, text FROM marked WHERE rn = 1),
+star_edges AS (
+  SELECT rep AS doc_a, doc_id AS doc_b FROM marked
+  WHERE cp = 1 AND doc_id <> rep
+)"""
+
+
+def _capped_bucket_pairs(
+    keyed: DataFrame, keys: list[str], cap: int = _LSH_BUCKET_CAP
+) -> DataFrame:
+    """(doc_a < doc_b) candidate pairs from a (``*keys``, doc_id)
+    bucketing, bounded by a deterministic first-``cap``-docs membership
+    cap per bucket.
+
+    One shuffle total: the row_number window partitions by the bucket
+    keys, and the collect_list groupBy reuses that exact exchange, so
+    the bounded arrays cost no extra shuffle; pair-gen is a narrow
+    double-explode of ≤cap-element arrays (never a self-join of the
+    exploded index).
+
+    Round-7 A/B: fusing the cap into the groupBy as
+    slice(sort_array(collect_list(..)), 1, cap) drops the window's
+    per-bucket sort and reads 0.14s faster at sf0.1 (1.54 vs 1.68 on
+    dedup_minhash_lsh) — rejected because the pre-slice collect_list
+    materializes UNBOUNDED per-bucket arrays (the OOM shape the
+    posting-cap design rule exists to forbid); the window streams.
+    """
+    rn = catalog.temp_col(keyed, "rn")
+    key_list = ", ".join(keys)
+    capped = keyed.selectExpr(
+        "*",
+        f"row_number() OVER (PARTITION BY {key_list} ORDER BY doc_id)"
+        f" AS {rn}",
+    ).filter(f"{rn} <= {cap}")
+    posting = capped.groupBy(*keys).agg(
+        F.expr("sort_array(collect_list(doc_id))").alias("ds")
+    )
+    return (
+        posting.selectExpr("explode(ds) AS doc_a", "ds")
+        .selectExpr("doc_a", "explode(ds) AS doc_b")
+        .filter("doc_a < doc_b")
+        .distinct()
+    )
+
+
+def _join_sides(
+    cand: DataFrame,
+    side: DataFrame,
+    col: str,
+    keys: tuple[str, str] = ("doc_a", "doc_b"),
+    broadcast: bool = False,
+) -> DataFrame:
+    """``cand`` with both pair sides' ``col`` from the per-doc
+    (doc_id, ``col``) sidecar joined in by id, as ``_xa`` / ``_xb``.
+    ``broadcast``: the caller's size gate says both sidecars fit an
+    executor, so the joins are map-side over the candidate stream; past
+    it they fall back to shuffle joins keyed on the id, bounded by the
+    capped candidate count."""
+    xa = side.selectExpr(f"doc_id AS {keys[0]}", f"{col} AS _xa")
+    xb = side.selectExpr(f"doc_id AS {keys[1]}", f"{col} AS _xb")
+    if broadcast:
+        xa, xb = F.broadcast(xa), F.broadcast(xb)
+    return cand.join(xa, keys[0]).join(xb, keys[1])
+
+
+def _jaccard_sql(n_shared: str, n_a: str, n_b: str) -> str:
+    """Exact |A∩B| / |A∪B| from the intersection and set sizes."""
+    return f"CAST({n_shared} AS DOUBLE) / ({n_a} + {n_b} - {n_shared})"
+
+
+# the ratio over two joined distinct-element arrays (_join_sides);
+# inlined rather than projected first, so no intermediate Project holds
+# the twice-referenced intersection
+_ARRAY_JAC_SQL = _jaccard_sql(
+    "size(array_intersect(_xa, _xb))", "size(_xa)", "size(_xb)"
+)
+
+
+def _keep_jaccard(
+    scored: DataFrame,
+    keys: tuple[str, str] = ("doc_a", "doc_b"),
+    jac: str = _ARRAY_JAC_SQL,
+    name: str = "jaccard_shingles",
+    t: float = _MH_VERIFY_T,
+) -> DataFrame:
+    """The Jaccard verify rule: keep pairs whose EXACT ratio reaches
+    ``t`` and report the ratio rounded half-up to 6 places. The cut is
+    on the exact ratio, as the DuckDB oracles apply it: a cut on the
+    rounded value would keep pairs just under ``t`` that round up."""
+    return scored.filter(f"{jac} >= {t}D").selectExpr(
+        *keys, f"{spark_hround(jac)} AS {name}"
+    )
+
+
 # --- n-gram Jaccard near-dup pairs (oracle-verified) -------------------------
 # Candidates + exact verify, the shape that survives 100 TB:
 #
@@ -118,11 +299,10 @@ _JACCARD_POSTING_CAP = 64
 # @x10 (5.9MB); cache wins 1.81 vs 2.20 at @x30 (18MB) and 2.01 vs
 # 2.35 at @x100 — the recompute term (3× split+array_distinct) crosses
 # the barrier cost at ~10MB. Driver-side file metadata, no scan — the
-# same gate mechanism as _JACCARD_BC_MAX_BYTES below.
+# same gate mechanism as catalog.BROADCAST_MAX_BYTES.
 _JACCARD_CACHE_MIN_BYTES = 8 * 1024 * 1024
-# verify-broadcast gate: documents.parquet bytes under which the
-# inverted index (~2-4x the raw bytes in memory) broadcasts safely
-_JACCARD_BC_MAX_BYTES = 64 * 1024 * 1024
+# the collapse carries the blocking keys onto the reps
+_JACCARD_CARRY = ("lang", "source")
 
 # scored-candidate CTE chain shared by the pair query and the
 # threshold-tuning curve below (one definition so they cannot drift)
@@ -189,62 +369,15 @@ SELECT doc_a, doc_b, 1.0 AS jaccard FROM jstar
 """
 
 
-def _jaccard_collapse(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(reps, star_edges) for the jaccard family — the same exact-
-    collapse contract as the LSH ops (_collapse_exact), carrying the
-    blocking columns (lang, source) on the reps. Posting caps have the
-    identical recall hole the LSH bucket caps had: exact twins fill
-    every capped posting list they appear in, crowding distinct
-    near-dups out and losing twin tails past the cap. Star edges span
-    blocks deliberately — identical text is a duplicate regardless of
-    which (lang, source) block each copy was filed under.
-
-    ONE text exchange total, same as _collapse_exact: all three windows
-    ride the single partitionBy(text) hash exchange (the (text, doc_id)
-    window's ClusteredDistribution is satisfied by hash(text) — subset
-    rule), and the row_numbers subsume the whole-row distinct the round-7
-    version ran as a separate exchange. _cp (not whole-row distinct)
-    kills replicated input rows — doc_id is the unit of pairing;
-    replicated rows would ride the verify joins on BOTH sides (dup² work
-    and dup²-inflated n_shared, measured 12.9×/decade at @x1000 before
-    the fix) — and pins ONE star edge per member even when a member row
-    is replicated with differing lang/source (the round-7 whole-row
-    distinct let those emit the same edge twice). _rn0's (doc_id, lang,
-    source) order makes the surviving rep row's block deterministic."""
-    # one selectExpr (round 14, same as _collapse_exact): identical
-    # parsed expressions, ~0.3s fewer py4j round trips per invocation
-    marked = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "source", "text")
-        .filter("text IS NOT NULL")
-        .selectExpr(
-            "doc_id",
-            "lang",
-            "source",
-            "text",
-            "min(doc_id) OVER (PARTITION BY text) AS _rep",
-            "row_number() OVER (PARTITION BY text"
-            " ORDER BY doc_id, lang, source) AS _rn0",
-            "row_number() OVER (PARTITION BY text, doc_id"
-            " ORDER BY lang, source) AS _cp",
-        )
-    )
-    reps = marked.filter("_rn0 = 1").select("doc_id", "lang", "source", "text")
-    star = marked.filter("_cp = 1 AND doc_id != _rep").selectExpr(
-        "_rep AS doc_a", "doc_id AS doc_b"
-    )
-    return reps, star
-
-
 def _jaccard_scored_pairs(
     spark: SparkSession, sf_dir: str, reps: DataFrame | None = None
 ) -> DataFrame:
-    """Verified candidate pairs with (doc_a, doc_b, n_a, n_b, n_shared)
+    """Verified candidate pairs with (doc_a, doc_b, n_shared, n_a, n_b)
     over the collapsed reps — the shared pipeline behind the pair query
     and the threshold curve (one definition so they cannot drift)."""
-    docs = reps if reps is not None else _jaccard_collapse(spark, sf_dir)[0]
+    if reps is None:
+        documents = load_table(spark, sf_dir, "documents")
+        reps = _collapse_exact(documents, _JACCARD_CARRY)[0]
     # ONE ROW PER DOC with the distinct-token ARRAY (not the exploded
     # index): candidate generation explodes from it, and the exact
     # verify reads the arrays directly — the full token volume never
@@ -254,7 +387,7 @@ def _jaccard_scored_pairs(
     # recomputes. Cache lifetime when taken: released by the
     # catalog.clearCache() the harness runs between registry entries;
     # longer-lived callers should unpersist after materializing.
-    toks = docs.selectExpr(
+    toks = reps.selectExpr(
         "doc_id",
         "lang",
         "source",
@@ -269,56 +402,21 @@ def _jaccard_scored_pairs(
     inv = toks.selectExpr(
         "doc_id", "lang", "source", "explode(tokens) AS token"
     )
-    # cap via window row_number (streams/spills — a raw collect_list of
-    # UNCAPPED posting lists would materialize per-group arrays bounded
-    # only by token frequency: an OOM at corpus scale), then collect the
-    # already-capped ≤CAP doc_ids per token in the SAME partitioning —
-    # the groupBy reuses the window's (lang, source, token) exchange, so
-    # the capped posting arrays cost no extra shuffle and are bounded by
-    # construction
-    capped = inv.selectExpr(
-        "*",
-        "row_number() OVER (PARTITION BY lang, source, token"
-        " ORDER BY doc_id) AS rn",
-    ).filter(f"rn <= {_JACCARD_POSTING_CAP}")
-    posting = capped.groupBy("lang", "source", "token").agg(
-        F.expr("sort_array(collect_list(doc_id))").alias("ds")
-    )
-    # pair-gen by double-explode of the bounded posting arrays — narrow
-    # (no self-join shuffle of the exploded index; ≤ CAP²/2 rows per
-    # token row by construction)
-    cand = (
-        posting.selectExpr("explode(ds) AS doc_a", "ds")
-        .selectExpr("doc_a", "explode(ds) AS doc_b")
-        .filter("doc_a < doc_b")
-        .distinct()
+    cand = _capped_bucket_pairs(
+        inv, ["lang", "source", "token"], _JACCARD_POSTING_CAP
     )
     # exact verify over full DISTINCT-token sets of the candidate pairs
-    # only — array_intersect over the cached per-doc token arrays, NO
-    # aggregation. History of this A/B (it flipped): rounds 6-8
-    # measured an exploded count-join (cand ⋈ index_a ⋈ index_b →
-    # groupBy pair) FASTER than the arrays shape (2.44s vs 3.42s at
-    # sf0.1, round 8) and kept it. Round 12, after the one-exchange
-    # collapse, the posting/cap fusion, and the toks cache shrank
-    # everything upstream, the same A/B at the new head reads arrays
-    # 0.99s vs count-join 1.52s best-of-5 — the count-join's final
-    # groupBy exchange and second join stage are now the plan's most
-    # expensive stages, while the arrays verify is two broadcast-gated
-    # joins and a map-side size(array_intersect): one fewer shuffle,
-    # no pairs×tokens intermediate. Outputs verified identical at
-    # sf0.01 and sf0.1 (exact set compare, both gate paths).
+    # only — array_intersect over the per-doc token arrays, NO
+    # aggregation. Interleaved A/B (round 12): arrays 0.99s vs an
+    # exploded count-join (cand ⋈ index_a ⋈ index_b → groupBy pair)
+    # 1.52s best-of-5 at sf0.1 — one fewer shuffle, no pairs×tokens
+    # intermediate. The set sizes ride along from the sidecar (n_tok),
+    # so this family's wiring is not _join_sides'. Broadcast under the
+    # catalog gate (see _join_sides); the arrays side is one row per
+    # doc, strictly smaller than the exploded index.
     ta = toks.selectExpr("doc_id AS doc_a", "tokens AS _ta", "n_tok AS n_a")
     tb = toks.selectExpr("doc_id AS doc_b", "tokens AS _tb", "n_tok AS n_b")
-    # size-gated broadcast of the verify arrays (driver-side file
-    # metadata, no scan): while the documents table is small enough
-    # that the per-doc token arrays fit an executor, both joins are
-    # broadcast and the verify is map-only; past the gate (the @x1000
-    # sweep, any real corpus) the plan falls back to shuffle joins
-    # keyed on doc_id — bounded by the candidate count, which the
-    # posting caps bound in turn. The arrays side is STRICTLY smaller
-    # than the exploded index the pre-round-12 verify shipped (same
-    # token payload, one row per doc instead of one per token).
-    if doc_bytes <= _JACCARD_BC_MAX_BYTES:
+    if doc_bytes <= catalog.BROADCAST_MAX_BYTES:
         ta, tb = F.broadcast(ta), F.broadcast(tb)
     return (
         cand.join(ta, "doc_a")
@@ -333,11 +431,9 @@ def _jaccard_scored_pairs(
     )
 
 
-# exact-jaccard over the scored-pair counts — the SQL string twin of
-# the old _jac_expr Column builder (round 15): same parse tree
-# (left-associative (n_a + n_b) - n_shared), one parser trip per
-# consumer instead of ~8 Column round trips per mention
-_JAC_SQL = "CAST(n_shared AS DOUBLE) / (n_a + n_b - n_shared)"
+# exact jaccard over the scored-pair counts (a projected n_shared: it
+# is referenced twice, so Spark keeps it in its own Project)
+_JAC_SQL = _jaccard_sql("n_shared", "n_a", "n_b")
 
 
 @register("dedup_jaccard_pairs", oracle=_JACCARD_ORACLE, headline=True)
@@ -347,11 +443,13 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rep, member, 1.0) for exact-duplicate members (full recall at any
     multiplicity, across blocks) plus exact-verified rep-level pairs
     at jaccard >= _JACCARD_T within (lang, source) blocks."""
-    reps, star = _jaccard_collapse(spark, sf_dir)
-    pairs = (
-        _jaccard_scored_pairs(spark, sf_dir, reps)
-        .filter(f"{_JAC_SQL} >= {_JACCARD_T}D")
-        .selectExpr("doc_a", "doc_b", f"{spark_hround(_JAC_SQL)} AS jaccard")
+    documents = load_table(spark, sf_dir, "documents")
+    reps, star = _collapse_exact(documents, _JACCARD_CARRY)
+    pairs = _keep_jaccard(
+        _jaccard_scored_pairs(spark, sf_dir, reps),
+        jac=_JAC_SQL,
+        name="jaccard",
+        t=_JACCARD_T,
     )
     return pairs.unionByName(star.selectExpr("*", "1.0D AS jaccard"))
 
@@ -400,7 +498,6 @@ def dedup_jaccard_threshold_curve(
 _MH_K = 32
 _MH_BANDS = 8
 _MH_ROWS = _MH_K // _MH_BANDS
-_MH_VERIFY_T = 0.5
 # shingle-array cache gate (round 13): same barrier-vs-recompute
 # mechanism as _JACCARD_CACHE_MIN_BYTES. After the bound-lambda
 # shingle rework removed the spread exchange, the uncached recompute
@@ -412,124 +509,6 @@ _MH_VERIFY_T = 0.5
 # 2.21/2.29 vs 2.24/2.58 at @x100. At 100 TB the gate always takes
 # the cache.
 _MINHASH_CACHE_MIN_BYTES = 4 * 1024 * 1024
-# Per-bucket membership cap for every banded candidate structure
-# (minhash bands, simhash chunks) — same role as _JACCARD_POSTING_CAP:
-# bounds pair-gen at cells × CAP² regardless of duplicate multiplicity.
-_LSH_BUCKET_CAP = 64
-
-
-def _collapse_exact(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Exact-duplicate collapse in front of every banded LSH structure:
-    (reps, star_edges) where ``reps`` keeps ONE row per distinct text
-    (min doc_id survivor) and ``star_edges`` is (doc_a=rep, doc_b=member)
-    for every other member — a LINEAR-size certificate of the full
-    exact-dup relation (the member clique is its transitive closure).
-
-    Why this is load-bearing for recall, not just perf: exact twins
-    have identical signatures, so they occupy the same ordered prefix
-    of EVERY band bucket they appear in — under a per-bucket membership
-    cap, twins past the cap would emit zero candidate pairs in ANY band
-    and silently escape dedup, and they'd crowd genuinely-distinct
-    near-dups out of the bucket prefix besides. Collapsing first makes
-    exact-dup recall exact at ANY multiplicity (every member is one
-    star edge) and leaves the caps to bound only genuinely-distinct
-    co-bucketed texts. Cost: the same one-shuffle text exchange
-    dedup_exact_canonical already pays — reps and star edges both come
-    out of the single min-over-window exchange.
-    """
-    # all three windows share the ONE partitionBy(text) exchange; the
-    # row_numbers (not equality-with-min filters) make the outputs
-    # duplication-proof: replicated input ROWS (same doc_id appearing
-    # n times — @xN amplification, or upstream ingest double-writes)
-    # yield exactly one rep row per text and one star edge per member,
-    # never n copies (an equality filter kept every copy of the min
-    # row, which re-introduced the dup² blowup downstream — caught by
-    # the @x1000 sweep)
-    # NULL text is UNKNOWN, not a duplicate class: the window would
-    # otherwise co-partition every NULL-text doc and emit "identical
-    # text" star edges between documents whose text is missing. Filter
-    # preserves the pre-collapse semantics (no shingles → no pairs).
-    # Built as ONE selectExpr (round 14): the Column-API form (three
-    # withColumn window calls) cost ~0.3s of py4j round trips PER
-    # INVOCATION on the driver — the parsed expressions are identical,
-    # so the physical plan (and output) is byte-for-byte the same.
-    marked = (
-        docs.select("doc_id", "text")
-        .filter("text IS NOT NULL")
-        .selectExpr(
-            "doc_id",
-            "text",
-            "min(doc_id) OVER (PARTITION BY text) AS _rep",
-            "row_number() OVER (PARTITION BY text ORDER BY doc_id) AS _rn",
-            "row_number() OVER (PARTITION BY text, doc_id ORDER BY doc_id)"
-            " AS _cp",
-        )
-    )
-    reps = marked.filter("_rn = 1").select("doc_id", "text")
-    edges = marked.filter("_cp = 1 AND doc_id != _rep").selectExpr(
-        "_rep AS doc_a", "doc_id AS doc_b"
-    )
-    return reps, edges
-
-
-# oracle CTE fragment mirroring _collapse_exact verbatim (row_numbers,
-# not equality-with-min, so replicated rows can't duplicate outputs):
-# ``docs`` = one row per distinct text (min doc_id), ``star_edges`` =
-# one (doc_a=rep, doc_b=member) edge per member
-_COLLAPSE_CTE = """marked AS (
-  SELECT doc_id, text,
-         MIN(doc_id) OVER (PARTITION BY text) AS rep,
-         ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id) AS rn,
-         ROW_NUMBER() OVER (PARTITION BY text, doc_id
-                            ORDER BY doc_id) AS cp
-  FROM documents
-  WHERE text IS NOT NULL
-),
-docs AS (SELECT doc_id, text FROM marked WHERE rn = 1),
-star_edges AS (
-  SELECT rep AS doc_a, doc_id AS doc_b FROM marked
-  WHERE cp = 1 AND doc_id <> rep
-)"""
-
-
-def _capped_bucket_pairs(
-    keyed: DataFrame, keys: list[str], cap: int = _LSH_BUCKET_CAP
-) -> DataFrame:
-    """(doc_a < doc_b) candidate pairs from a (``*keys``, doc_id)
-    bucketing, bounded by a deterministic first-``cap``-docs membership
-    cap per bucket.
-
-    One shuffle total: the row_number window partitions by the bucket
-    keys, and the collect_list groupBy reuses that exact exchange, so
-    the bounded arrays cost no extra shuffle; pair-gen is a narrow
-    double-explode of ≤cap-element arrays (never a self-join of the
-    exploded index).
-
-    Round-7 A/B: fusing the cap into the groupBy as
-    slice(sort_array(collect_list(..)), 1, cap) drops the window's
-    per-bucket sort and reads 0.14s faster at sf0.1 (1.54 vs 1.68 on
-    dedup_minhash_lsh) — rejected because the pre-slice collect_list
-    materializes UNBOUNDED per-bucket arrays (the OOM shape the
-    posting-cap design rule exists to forbid); the window streams.
-    """
-    from ..catalog import temp_col
-
-    rn = temp_col(keyed, "rn")
-    key_list = ", ".join(keys)
-    capped = keyed.selectExpr(
-        "*",
-        f"row_number() OVER (PARTITION BY {key_list} ORDER BY doc_id)"
-        f" AS {rn}",
-    ).filter(f"{rn} <= {cap}")
-    posting = capped.groupBy(*keys).agg(
-        F.expr("sort_array(collect_list(doc_id))").alias("ds")
-    )
-    return (
-        posting.selectExpr("explode(ds) AS doc_a", "ds")
-        .selectExpr("doc_a", "explode(ds) AS doc_b")
-        .filter("doc_a < doc_b")
-        .distinct()
-    )
 
 
 def shingle_arrays(docs: DataFrame, n: int = 3, spread: bool = True) -> DataFrame:
@@ -683,8 +662,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     components of the edge set are the dup clusters; the all-pairs
     clique (quadratic under duplication) is recoverable by closure and
     deliberately not materialized."""
-    all_docs = load_table(spark, sf_dir, "documents")
-    docs, star = _collapse_exact(all_docs)  # shingle_rows spreads
+    docs, star = _collapse_exact(load_table(spark, sf_dir, "documents"))
     # ZERO shuffles on the signature side: the per-doc shingle arrays
     # are a narrow projection (shingle_arrays, spread=False — the
     # collapse window's exchange already distributed the reps, so the
@@ -721,46 +699,24 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = sigs.selectExpr(
         "doc_id", f"explode(array({structs})) AS bb"
     ).selectExpr("doc_id", "bb.band", "bb.bucket")
-    # candidate pairs per (band, bucket) with the same bounded-membership
-    # pattern as the jaccard posting lists: a bucket holding m co-hashed
-    # docs would otherwise emit m² pairs — quadratic in co-bucket
-    # multiplicity (measured 7.6×/decade at @x100 pre-collapse, vs ≤1.7×
-    # for the capped plans). Cap via row_number, collect the ≤CAP
-    # doc_ids per bucket in the SAME exchange, pair-gen by double-
-    # explode of the bounded arrays — no self-join shuffle, ≤ CAP²/2
-    # pairs per bucket by construction. Recall note: exact twins never
-    # reach these buckets (collapsed upstream into star edges — full
-    # recall at any multiplicity); the cap binds only on ≥CAP DISTINCT
-    # texts sharing a band signature, and a rep past the cap in one
-    # bucket still candidates through its other _MH_BANDS-1 bands.
-    cand = _capped_bucket_pairs(bands, ["band", "bucket"], _LSH_BUCKET_CAP)
-    # verification: exact shingle-set Jaccard from the cached per-doc
-    # sets, joined in by doc_id (AQE broadcasts the small candidate
-    # side at this scale; sort-merge by doc_id at cluster scale)
-    sh_a = sets.selectExpr("doc_id AS doc_a", "shingles AS sh_a")
-    sh_b = sets.selectExpr("doc_id AS doc_b", "shingles AS sh_b")
-    # size-gated broadcast of the verify arrays — the exact
-    # _jaccard_scored_pairs pattern and gate (round 15): while the
-    # documents table is small enough that the per-doc shingle arrays
-    # fit an executor, both verify joins are map-side over the
-    # candidate stream (interleaved A/B at sf0.1: best 0.76 vs 0.99,
-    # 7 -> 6 AQE jobs; @x10: 1.09 vs 1.22 — outputs identical both
-    # scales); past the gate the plan falls back to shuffle joins
-    # keyed on doc_id, bounded by the capped candidate count.
-    if doc_bytes <= _JACCARD_BC_MAX_BYTES:
-        sh_a, sh_b = F.broadcast(sh_a), F.broadcast(sh_b)
-    # string-twin verify expressions (round 15, same discipline as the
-    # round-14 conversions): identical parsed trees — the Column form
-    # bound `inter` once in Python but spliced the SAME subtree into
-    # both consumers, which is exactly what the repeated text does
-    inter = "size(array_intersect(sh_a, sh_b))"
-    jac = f"CAST({inter} AS DOUBLE) / ((size(sh_a) + size(sh_b)) - {inter})"
-    pairs = (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .selectExpr("*", f"{spark_hround(jac)} AS jaccard_shingles")
-        .filter(f"jaccard_shingles >= {_MH_VERIFY_T}D")
-        .selectExpr("doc_a", "doc_b", "jaccard_shingles")
+    # bounded pair-gen per (band, bucket): a bucket holding m co-hashed
+    # docs would otherwise emit m² pairs (measured 7.6×/decade at @x100
+    # pre-collapse, vs ≤1.7× capped). The cap binds only on ≥CAP
+    # DISTINCT texts sharing a band signature (twins were collapsed),
+    # and a rep past the cap in one bucket still candidates through its
+    # other _MH_BANDS-1 bands.
+    cand = _capped_bucket_pairs(bands, ["band", "bucket"])
+    # verify: exact shingle-set Jaccard from the per-doc sets. The
+    # size-gated broadcast (round 15) made both verify joins map-side
+    # over the candidate stream: interleaved A/B at sf0.1 best 0.76 vs
+    # 0.99, 7 -> 6 AQE jobs; @x10 1.09 vs 1.22, outputs identical.
+    pairs = _keep_jaccard(
+        _join_sides(
+            cand,
+            sets,
+            "shingles",
+            broadcast=doc_bytes <= catalog.BROADCAST_MAX_BYTES,
+        )
     )
     # star edges carry jaccard 1.0 BY DEFINITION (identical text ⟹
     # identical shingle set) — no verify join needed, and <3-token docs
@@ -776,16 +732,20 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pair within hamming distance 3 MUST collide in some chunk, so the
 # verify threshold is 3 (a higher advertised radius would silently miss
 # pairs whose differing bits spread across all four chunks; raise
-# _SH_CHUNKS to k+1 to widen the guaranteed radius to k).
+# _SH_CHUNKS to k+1 to widen the guaranteed radius to k). A simhash
+# family supplies only its token → 64-bit hash (_xxhash_token here,
+# _portable_token_hash for the oracle twin); the vote fold, signature,
+# chunk banding and hamming verify below are shared.
 
 _SH_BITS = 62
 _SH_CHUNKS = 4
+# the verify: keep pairs inside the pigeonhole guaranteed-recall radius
+_SH_KEEP = f"hamming <= {_SH_CHUNKS - 1}"
 
 
-def _token_bits(t):
+def _hash_bits(h):
     """±1 bit vector of a token's 64-bit hash (bit positions unrolled in
     Python — F.shiftright needs a literal shift amount)."""
-    h = F.xxhash64(t)
     return F.array(
         *[
             F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
@@ -794,19 +754,31 @@ def _token_bits(t):
     )
 
 
-def bitvec_expr():
-    toks = F.array_distinct(F.split("text", " "))
+def _vote_fold(token_hash):
+    """Per-bit ±1 vote sums over the distinct tokens of ``text``. The
+    hashes are computed by a transform first, so the fold sees each one
+    as a lambda VARIABLE: inlined into _hash_bits, the hash would be
+    evaluated once per bit (62×/token)."""
+    hashes = F.transform(F.array_distinct(F.split("text", " ")), token_hash)
     return F.aggregate(
-        toks,
+        hashes,
         F.array_repeat(F.lit(0), _SH_BITS),
-        lambda acc, t: F.zip_with(acc, _token_bits(t), lambda x, y: x + y),
+        lambda acc, h: F.zip_with(acc, _hash_bits(h), lambda x, y: x + y),
     )
 
 
-def simhash_df(docs: DataFrame) -> DataFrame:
-    """doc_id + 62-bit simhash. Two projection steps so the expensive
-    fold is evaluated once, not per sign-bit."""
-    bv = docs.select("doc_id", bitvec_expr().alias("bv"))
+def _xxhash_token(t):
+    return F.xxhash64(t)
+
+
+def bitvec_expr():
+    return _vote_fold(_xxhash_token)
+
+
+def _signatures(docs: DataFrame, bv) -> DataFrame:
+    """doc_id + 62-bit simhash from the vote vector ``bv``. Two
+    projection steps so the expensive fold is evaluated once, not per
+    sign-bit."""
     signature = F.aggregate(
         F.zip_with(
             F.col("bv"),
@@ -817,7 +789,64 @@ def simhash_df(docs: DataFrame) -> DataFrame:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    return bv.select("doc_id", signature.alias("simhash"))
+    return docs.select("doc_id", bv.alias("bv")).select(
+        "doc_id", signature.alias("simhash")
+    )
+
+
+def simhash_df(docs: DataFrame) -> DataFrame:
+    """doc_id + 62-bit simhash over xxhash64 token hashes."""
+    return _signatures(docs, bitvec_expr())
+
+
+def _simhash_bands(sh: DataFrame) -> DataFrame:
+    """(doc_id, band, band_sig): the signature's 16-bit chunks, the
+    bucket keys candidate pairs form in."""
+    chunks = ", ".join(
+        f"struct({c} AS band,"
+        f" shiftright(simhash, {16 * c}) & {(1 << 16) - 1} AS band_sig)"
+        for c in range(_SH_CHUNKS)
+    )
+    return sh.selectExpr("doc_id", f"explode(array({chunks})) AS cc").selectExpr(
+        "doc_id", "cc.band", "cc.band_sig"
+    )
+
+
+def _hamming(joined: DataFrame) -> DataFrame:
+    """``joined`` plus the hamming distance of its ``_xa`` / ``_xb``
+    signatures."""
+    return joined.withColumn("hamming", F.expr("bit_count(_xa ^ _xb)"))
+
+
+def _simhash_scored(
+    spark: SparkSession, sf_dir: str, token_hash
+) -> tuple[DataFrame, DataFrame]:
+    """(scored, star): every banded candidate pair between the
+    collapsed reps with its hamming distance, UNfiltered (the radius
+    cut is the pair ops'; the threshold curve histograms every pair),
+    plus the exact-collapse star edges."""
+    reps, star = _collapse_exact(load_table(spark, sf_dir, "documents"))
+    # 62 bit votes/token + chunk pair-gen: core-bound, not split-bound.
+    # Cached: the vote fold feeds the chunk explode AND both verify
+    # sides (lifetime: the harness's clearCache between entries)
+    sh = _signatures(spread_to_cores(reps), _vote_fold(token_hash)).cache()
+    cand = _capped_bucket_pairs(_simhash_bands(sh), ["band", "band_sig"])
+    # one row per pair even if doc_ids repeat in the corpus (the
+    # signature join-back would otherwise multiply each pair by the
+    # duplication factor squared); mirrors the oracle's DISTINCT cand
+    scored = (
+        _hamming(_join_sides(cand, sh, "simhash"))
+        .dropDuplicates(["doc_a", "doc_b"])
+        .select("doc_a", "doc_b", "hamming")
+    )
+    return scored, star
+
+
+def _simhash_pairs(spark: SparkSession, sf_dir: str, token_hash) -> DataFrame:
+    scored, star = _simhash_scored(spark, sf_dir, token_hash)
+    pairs = scored.filter(_SH_KEEP)
+    # identical text ⟹ identical signature: star edges are hamming 0
+    return pairs.unionByName(star.withColumn("hamming", F.lit(0)))
 
 
 @register("dedup_simhash", oracle=None)
@@ -831,54 +860,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     representatives. The hamming≤3 guaranteed-recall radius therefore
     holds between DISTINCT texts regardless of duplicate multiplicity —
     exact twins never compete for bucket-cap slots."""
-    # 62 hashes/token + chunk-join pair-gen: core-bound, not split-bound
-    reps, star = _collapse_exact(load_table(spark, sf_dir, "documents"))
-    docs = spread_to_cores(reps)
-    # cached: the 62-hash fold feeds the chunk explode AND both hamming
-    # verify sides (lifetime: the harness's clearCache between entries)
-    sh = simhash_df(docs).cache()
-    chunk_w = 16
-    chunks = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("simhash"), c * chunk_w)
-                        .bitwiseAND(F.lit((1 << chunk_w) - 1))
-                        .alias("val"),
-                    )
-                    for c in range(_SH_CHUNKS)
-                ]
-            )
-        ).alias("cc"),
-    ).select("doc_id", "cc.chunk", "cc.val")
-    # bounded pair-gen per 16-bit chunk bucket (same membership-cap
-    # pattern as the minhash bands — an exact-dup-heavy bucket would
-    # otherwise pair quadratically); signatures joined back by doc_id
-    # for the hamming verify
-    cand = _capped_bucket_pairs(chunks, ["chunk", "val"])
-    cand = cand.join(
-        sh.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a")),
-        "doc_a",
-    ).join(
-        sh.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sh_b")),
-        "doc_b",
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    pairs = (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= _SH_CHUNKS - 1)  # guaranteed-recall radius
-        # one row per pair even if doc_ids repeat in the corpus (the
-        # signature join-back would otherwise multiply each pair by the
-        # duplication factor squared); signatures of identical docs are
-        # identical, so any survivor is the same row
-        .dropDuplicates(["doc_a", "doc_b"])
-        .select("doc_a", "doc_b", "hamming")
-    )
-    return pairs.unionByName(star.withColumn("hamming", F.lit(0)))
+    return _simhash_pairs(spark, sf_dir, _xxhash_token)
 
 
 # --- MinHash-LSH, portable-hash variant (fully oracle-verified) --------------
@@ -1074,21 +1056,9 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         spread=False,
     )
     # bounded pair-gen per band bucket, cap mirrored verbatim in the
-    # oracle's `capped` CTE
+    # oracle's `capped` CTE; verify over the per-doc code arrays
     cand = _capped_bucket_pairs(bands, ["band", "band_sig"])
-    # exact verify: band candidates are few, so array_intersect over the
-    # cached per-doc code arrays (joined in by doc_id) replaces the
-    # explode + count-group over code rows
-    ha = sh.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("h_a"))
-    hb = sh.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("h_b"))
-    ni = F.size(F.array_intersect("h_a", "h_b"))
-    jac = ni.cast("double") / (F.size("h_a") + F.size("h_b") - ni)
-    pairs = (
-        cand.join(ha, "doc_a")
-        .join(hb, "doc_b")
-        .filter(jac >= _MH_VERIFY_T)
-        .select("doc_a", "doc_b", hround(jac).alias("jaccard_shingles"))
-    )
+    pairs = _keep_jaccard(_join_sides(cand, sh, "hs"))
     return pairs.unionByName(star.withColumn("jaccard_shingles", F.lit(1.0)))
 
 
@@ -1185,16 +1155,8 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .dropDuplicates(["new_id", "old_id"])
     )
-    ha = sh.select(F.col("doc_id").alias("new_id"), F.col("hs").alias("h_a"))
-    hb = sh.select(F.col("doc_id").alias("old_id"), F.col("hs").alias("h_b"))
-    ni = F.size(F.array_intersect("h_a", "h_b"))
-    jac = ni.cast("double") / (F.size("h_a") + F.size("h_b") - ni)
-    return (
-        cand.join(ha, "new_id")
-        .join(hb, "old_id")
-        .filter(jac >= _MH_VERIFY_T)
-        .select("new_id", "old_id", hround(jac).alias("jaccard_shingles"))
-    )
+    keys = ("new_id", "old_id")
+    return _keep_jaccard(_join_sides(cand, sh, "hs", keys), keys)
 
 
 # --- SimHash, portable-hash variant (fully oracle-verified) ------------------
@@ -1223,17 +1185,6 @@ def _portable_token_hash(t):
     # low and high 31-bit halves from independently-keyed avalanches
     code = _portable_token_code(t)
     return _mix31(code, _PSH_K1) + _mix31(code * 31 + 7, _PSH_K2) * _PSH_M31
-
-
-def _psh_bits_of_hash(h):
-    # h is a lambda VARIABLE here — the avalanche runs once per token;
-    # inlining it would re-evaluate the whole mix per bit (62x/token)
-    return F.array(
-        *[
-            F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            for j in range(_SH_BITS)
-        ]
-    )
 
 
 def _portable_simhash_cte() -> str:
@@ -1315,87 +1266,13 @@ SELECT doc_a, doc_b, CAST(0 AS INTEGER) AS hamming FROM star_edges
 """
 
 
-def _portable_simhash_scored(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(scored, star): all deduped banded candidate pairs with their
-    hamming distance (UNfiltered — the radius cut is the caller's), plus
-    the exact-collapse star edges. Shared by the portable pair op and
-    the threshold curve, mirroring the oracle's shared ``cand`` CTE."""
-    reps, star = _collapse_exact(load_table(spark, sf_dir, "documents"))
-    docs = spread_to_cores(reps)
-    toks = F.array_distinct(F.split("text", " "))
-    hashes = F.transform(toks, lambda t: _portable_token_hash(t))
-    bv = docs.select(
-        "doc_id",
-        F.aggregate(
-            hashes,
-            F.array_repeat(F.lit(0), _SH_BITS),
-            lambda acc, h: F.zip_with(acc, _psh_bits_of_hash(h), lambda x, y: x + y),
-        ).alias("bv"),
-    )
-    signature = F.aggregate(
-        F.zip_with(
-            F.col("bv"),
-            F.array(*[F.lit(1 << j).cast("long") for j in range(_SH_BITS)]),
-            lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    # cached: the 62-bit vote fold feeds the chunk explode AND both
-    # hamming verify sides (lifetime: harness clearCache between entries)
-    sh = bv.select("doc_id", signature.alias("simhash")).cache()
-    chunk_w = 16
-    chunks = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("simhash"), c * chunk_w)
-                        .bitwiseAND(F.lit((1 << chunk_w) - 1))
-                        .alias("val"),
-                    )
-                    for c in range(_SH_CHUNKS)
-                ]
-            )
-        ).alias("cc"),
-    ).select("doc_id", "cc.chunk", "cc.val")
-    # bounded pair-gen per chunk bucket (cap mirrored in the oracle's
-    # `capped` CTE); signatures joined back by doc_id for the verify
-    cand = _capped_bucket_pairs(chunks, ["chunk", "val"])
-    cand = cand.join(
-        sh.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a")),
-        "doc_a",
-    ).join(
-        sh.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sh_b")),
-        "doc_b",
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    scored = (
-        cand.withColumn("hamming", hamming)
-        # one row per pair under doc_id duplication — mirrors the
-        # oracle's DISTINCT cand (see dedup_simhash for the rationale)
-        .dropDuplicates(["doc_a", "doc_b"])
-        .select("doc_a", "doc_b", "hamming")
-    )
-    return scored, star
-
-
 @register("dedup_simhash_portable", oracle=_portable_simhash_oracle())
 def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-exact twin of dedup_simhash — same collapse-first
     cluster-certificate contract (star edges at hamming 0 + banded
     rep-level pairs), portable arithmetic hashes;
     (doc_a, doc_b, hamming)."""
-    scored, star = _portable_simhash_scored(spark, sf_dir)
-    pairs = scored.filter(F.col("hamming") <= _SH_CHUNKS - 1)
-    return pairs.unionByName(
-        star.withColumn("hamming", F.lit(0).cast("int"))
-    )
+    return _simhash_pairs(spark, sf_dir, _portable_token_hash)
 
 
 # --- simhash threshold-tuning curve -------------------------------------------
@@ -1421,7 +1298,7 @@ GROUP BY 1
 def dedup_simhash_threshold_curve(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    scored, _ = _portable_simhash_scored(spark, sf_dir)
+    scored, _ = _simhash_scored(spark, sf_dir, _portable_token_hash)
     return (
         scored.select(F.col("hamming").cast("long").alias("hamming"))
         .groupBy("hamming")

@@ -72,15 +72,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.exact import hround
 from ..functions.jvmrows import empty_df, one_row_df
 from .dedup import (
     _LSH_BUCKET_CAP,
     _MH_BANDS,
-    _MH_VERIFY_T,
     _SH_CHUNKS,
+    _SH_KEEP,
     _collapse_exact,
+    _hamming,
+    _keep_jaccard,
     _portable_minhash_tables,
+    _simhash_bands,
     simhash_df,
     spread_to_cores,
 )
@@ -104,62 +106,43 @@ def _simhash_store_tables(
 ) -> tuple[DataFrame, DataFrame]:
     """(sidecar, banded) for the simhash family: sidecar = (doc_id,
     simhash) — the 62-bit signature the hamming verify reads; banded =
-    (doc_id, band, band_sig) from the 4×16-bit chunk split (the exact
-    arithmetic of dedup_simhash, dedup.py:743)."""
-    chunk_w = 16
+    (doc_id, band, band_sig) from the 16-bit chunk split (the exact
+    arithmetic of dedup.dedup_simhash)."""
     sh = simhash_df(
-        spread_to_cores(
-            docs.select("doc_id", "text").filter(F.col("text").isNotNull())
-        )
+        spread_to_cores(docs.select("doc_id", "text").filter("text IS NOT NULL"))
     )
     if cache:
         sh = sh.cache()
-    banded = sh.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("band"),
-                        F.shiftright(F.col("simhash"), c * chunk_w)
-                        .bitwiseAND(F.lit((1 << chunk_w) - 1))
-                        .alias("band_sig"),
-                    )
-                    for c in range(_SH_CHUNKS)
-                ]
-            )
-        ).alias("cc"),
-    ).select("doc_id", "cc.band", "cc.band_sig")
-    return sh, banded
+    return sh, _simhash_bands(sh)
+
+
+_STORE_KEYS = ("new_id", "old_id")
+
+
+def _store_join(
+    cand: DataFrame, shb: DataFrame, codes: DataFrame, col: str
+) -> DataFrame:
+    """Both sides' sidecar ``col`` joined onto the (new_id, old_id)
+    candidates as ``_xa`` / ``_xb``: the batch side broadcast into the
+    candidates, and that whole batch-sized side broadcast against the
+    scanned store sidecar, which is never shuffled."""
+    ha = shb.selectExpr("doc_id AS new_id", f"{col} AS _xa")
+    hb = codes.selectExpr("doc_id AS old_id", f"{col} AS _xb")
+    return F.broadcast(cand.join(F.broadcast(ha), "new_id")).join(hb, "old_id")
 
 
 def _verify_minhash(cand: DataFrame, shb: DataFrame, codes: DataFrame) -> DataFrame:
-    """Exact-jaccard verify over shingle-code arrays (broadcast batch
-    side vs the scanned sidecar)."""
-    ha = shb.select(F.col("doc_id").alias("new_id"), F.col("hs").alias("h_a"))
-    hb = codes.select(F.col("doc_id").alias("old_id"), F.col("hs").alias("h_b"))
-    ni = F.size(F.array_intersect("h_a", "h_b"))
-    jac = ni.cast("double") / (F.size("h_a") + F.size("h_b") - ni)
-    return (
-        F.broadcast(cand.join(F.broadcast(ha), "new_id"))
-        .join(hb, "old_id")
-        .filter(jac >= _MH_VERIFY_T)
-        .select("new_id", "old_id", hround(jac).alias("jaccard_shingles"))
-    )
+    """Exact-jaccard verify over shingle-code arrays (dedup._keep_jaccard)."""
+    return _keep_jaccard(_store_join(cand, shb, codes, "hs"), _STORE_KEYS)
 
 
 def _verify_simhash(cand: DataFrame, shb: DataFrame, codes: DataFrame) -> DataFrame:
     """Hamming verify at the chunk-count guaranteed-recall radius
-    (<= _SH_CHUNKS - 1, the pigeonhole bound — dedup.py:694)."""
-    ha = shb.select(F.col("doc_id").alias("new_id"), F.col("simhash").alias("sh_a"))
-    hb = codes.select(F.col("doc_id").alias("old_id"), F.col("simhash").alias("sh_b"))
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    (<= _SH_CHUNKS - 1, the pigeonhole bound — see dedup.dedup_simhash)."""
     return (
-        F.broadcast(cand.join(F.broadcast(ha), "new_id"))
-        .join(hb, "old_id")
-        .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= _SH_CHUNKS - 1)
-        .select("new_id", "old_id", "hamming")
+        _hamming(_store_join(cand, shb, codes, "simhash"))
+        .filter(_SH_KEEP)
+        .select(*_STORE_KEYS, "hamming")
     )
 
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import catalog
 from ..catalog import knuth_hash as _knuth_hash
 from ..catalog import load_table
 from ..catalog import oracle_knuth_hash as _oracle_knuth_hash
@@ -43,12 +44,6 @@ from ..functions.exact import (
     unscale,
 )
 from ..registry import register
-
-# broadcast gate for q3's filtered cust⋈orders side — same 64 MB
-# file-metadata gate the dedup verify joins use (an executor holds the
-# built relation comfortably below it; past it AQE keeps the runtime
-# strategy choice)
-_Q3_BC_MAX_BYTES = 64 * 1024 * 1024
 
 # --- star join: revenue per region/nation ------------------------------------
 # lineitem ⨝ orders (fact-fact, shuffle on orderkey) then customer →
@@ -159,8 +154,6 @@ LIMIT 10
 """,
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import table_file_bytes
-
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
@@ -177,9 +170,10 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cust⋈orders stage barrier — the static hint skips that wait
     # (interleaved A/B best 0.48 vs 0.83, median 0.61 vs 0.97 at
     # sf0.1; outputs identical). Gated on the UNFILTERED orders bytes
-    # (filters/projection only shrink the side), so past 64 MB the
-    # hint disappears and AQE keeps the runtime choice.
-    if table_file_bytes(spark, sf_dir, "orders") <= _Q3_BC_MAX_BYTES:
+    # (filters/projection only shrink the side), so past the catalog
+    # gate the hint disappears and AQE keeps the runtime choice.
+    orders_bytes = catalog.table_file_bytes(spark, sf_dir, "orders")
+    if orders_bytes <= catalog.BROADCAST_MAX_BYTES:
         co = F.broadcast(co)
     # per-order groups are bounded (~7 lines/order) → single-level LONG
     return (

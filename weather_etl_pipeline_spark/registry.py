@@ -84,18 +84,6 @@ def register(
 # then queries whose implementation changed since the last green run,
 # then the long-stable remainder. Names not listed keep registration
 # order after the listed ones.
-#
-# NEXT ROTATION (round 3): the round-2 additions have local diffcheck
-# verdicts but no harness verdict yet — promote them into the window,
-# rotating out entries green in rounds 1-2: the full tpch.py sweep
-# (q2 q5 q7 q8 q9 q11 q13 q15 q16 q17 q19 q20 q21 q22), scaleops
-# (split/salted/stratified), portable twins (minhash/simhash/ivf),
-# and the round-2-session operators (ntile, asof-forward, levenshtein,
-# datetime/string/try profiles, interpolation, sessionize, json-map,
-# array features, share-of-total, regression, skew/kurtosis, curation,
-# decontaminate, repetition, variant, best-quality dedup, chunker,
-# cross join). asof_join_last_error's internals changed in round 2
-# (direction parameter) — re-verify it too.
 _PRIORITY = [
     "q1_pricing_summary",  # flagship — keep first
     # families with no harness verdict yet (round 1 window ended at 50)

@@ -47,7 +47,7 @@ def get_spark(
     # JVMs (multi-PROCESS execution: real serialization across the
     # driver/executor boundary, per-executor Python workers, broadcast
     # over the wire) for deployment-shaped validation of assumptions
-    # local mode hides. See tools/local_cluster_check.py.
+    # local mode hides.
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     builder = (
         SparkSession.builder.master(master)
