@@ -7,6 +7,7 @@ mirroring FIXTURES.md §1."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 
@@ -342,3 +343,179 @@ def test_observe_metrics_during_silver_clean(spark):
     assert m["n_rows"] == ev.count()
     assert n_out == m["n_rows"] - m["n_null_value"]
     assert m["n_negative"] >= 0
+
+
+def _file_scans(df):
+    """The FileSourceScanExec nodes of ``df``'s executed plan, looking
+    through adaptive plans and their query stages."""
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            yield from walk(node.executedPlan())
+            return
+        if name.endswith("QueryStageExec"):
+            yield from walk(node.plan())
+            return
+        if name == "FileSourceScanExec":
+            yield node
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+
+    return list(walk(df._jdf.queryExecution().executedPlan()))
+
+
+def test_incremental_scan_reads_only_pending_partitions(spark, lake, monkeypatch):
+    """An incremental silver run lists and reads only the pending
+    partitions' files, and the scan's PartitionFilters carry the
+    work-list (a semi-join against the work-list pruned nothing: every
+    run read the whole bronze zone). ``DataFrame.inputFiles()`` cannot
+    show this: on a path-based scan it lists the whole zone whatever the
+    PartitionFilters, so the files read come from the scan's own
+    metrics."""
+    from weather_etl_pipeline_spark.plans import pipeline
+    from weather_etl_pipeline_spark.sources.parquet_io import append_partitions
+
+    old_days = ("2026-02-10", "2026-02-11", "2026-02-12")
+    append_partitions(make_bronze(spark, dates=old_days), lake.bronze)
+    assert run_silver(spark, lake) == 4 * len(old_days)
+    append_partitions(make_bronze(spark, dates=("2026-02-13",)), lake.bronze)
+
+    seen = []
+    clean = pipeline.clean_bronze
+    monkeypatch.setattr(
+        pipeline, "clean_bronze", lambda df: seen.append(df) or clean(df)
+    )
+    assert run_silver(spark, lake) == 4
+
+    [pending] = seen
+    read = pending.select(F.input_file_name().alias("f"))
+    rows = read.collect()
+    [scan] = _file_scans(read)
+    new_files = {
+        os.path.join(root, f)
+        for root, _, files in os.walk(lake.bronze)
+        if root.endswith("date=2026-02-13")
+        for f in files
+        if f.endswith(".parquet")
+    }
+    assert {r["f"].removeprefix("file://") for r in rows} == new_files
+    metrics = scan.metrics()
+    assert metrics.apply("numFiles").value() == len(new_files)
+    assert metrics.apply("numPartitions").value() == 4
+    filters = scan.partitionFilters().mkString(" AND ")
+    new_day = (dt.date(2026, 2, 13) - dt.date(1970, 1, 1)).days
+    for city in CITIES:
+        assert f"[{city},{new_day}]" in filters
+        for day in old_days:
+            old = (dt.date.fromisoformat(day) - dt.date(1970, 1, 1)).days
+            assert f"[{city},{old}]" not in filters
+
+
+def _zone_snapshot(path):
+    """(relative path, size, mtime) of every file under a zone."""
+    snap = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            st = os.stat(os.path.join(root, f))
+            snap.append((os.path.relpath(os.path.join(root, f), path),
+                         st.st_size, st.st_mtime_ns))
+    return sorted(snap)
+
+
+def test_failed_gold_validation_leaves_zone_and_metadata_untouched(
+    spark, lake, monkeypatch
+):
+    """The gold null-average gate keeps its message and still fires
+    before anything is written: a failing gold pass leaves the gold
+    zone and the metadata table exactly as the last good run left
+    them."""
+    from weather_etl_pipeline_spark.plans import pipeline
+
+    run_pipeline(spark, lake, bronze_df=make_bronze(spark))
+    gold_before = _zone_snapshot(lake.gold)
+    meta_before = sorted(map(tuple, read_metadata(spark, lake.metadata).collect()))
+
+    def null_london_avg(silver):
+        out = aggregate_silver(silver)
+        return out.withColumn(
+            "avg_temp", F.when(F.col("city") != "London", F.col("avg_temp"))
+        )
+
+    monkeypatch.setattr(pipeline, "aggregate_silver", null_london_avg)
+    with pytest.raises(ValidationError, match=r"^2 rows with NULL avg_temp$"):
+        run_gold(spark, lake, full_refresh=True)
+    assert _zone_snapshot(lake.gold) == gold_before
+    meta_after = sorted(map(tuple, read_metadata(spark, lake.metadata).collect()))
+    assert meta_after == meta_before
+
+
+def test_null_partition_value_fails_empty_partition_gate(spark, lake, tmp_path):
+    """A NULL partition value in the work-list fails the empty-partition
+    gate, on a first run (no predicate) and on an incremental run (the
+    literal work-list predicate)."""
+    from weather_etl_pipeline_spark.plans.pipeline import LakePaths
+    from weather_etl_pipeline_spark.sources.parquet_io import append_partitions
+
+    def with_null_city(dates):
+        bronze = make_bronze(spark, dates=dates)
+        return bronze.unionByName(
+            make_bronze(spark, cities=["Delhi"], dates=dates).withColumn(
+                "city", F.lit(None).cast("string")
+            )
+        )
+
+    fresh = LakePaths(str(tmp_path / "fresh"))
+    append_partitions(with_null_city(("2026-02-13",)), fresh.bronze)
+    with pytest.raises(ValidationError, match=r"\('None', '2026-02-13'\)"):
+        run_silver(spark, fresh)
+
+    append_partitions(make_bronze(spark, dates=("2026-02-13",)), lake.bronze)
+    assert run_silver(spark, lake) == 4
+    append_partitions(with_null_city(("2026-02-14",)), lake.bronze)
+    with pytest.raises(
+        ValidationError,
+        match=r"^layer silver: no rows produced for partitions "
+        r"\[\('None', '2026-02-14'\)\]$",
+    ):
+        run_silver(spark, lake)
+
+
+def test_gold_gates_run_in_one_action(spark, lake, monkeypatch):
+    """Both gold gates (empty partition, NULL average) are answered by
+    ONE action over the cached layer output: DataFrame actions between
+    the transform and the write are counted (jobs are not, since
+    adaptive execution may split one action into several jobs)."""
+    from weather_etl_pipeline_spark.plans import layers, pipeline
+    from weather_etl_pipeline_spark.sources.parquet_io import append_partitions
+
+    append_partitions(make_bronze(spark), lake.bronze)
+    assert run_silver(spark, lake) == 8
+
+    actions = []
+    cls = type(spark.range(1))
+    for name in ("collect", "count", "isEmpty", "toLocalIterator"):
+        method = getattr(cls, name)
+
+        def counted(self, *a, _method=method, **kw):
+            actions.append(_method.__name__)
+            return _method(self, *a, **kw)
+
+        monkeypatch.setattr(cls, name, counted)
+    marks = {}
+
+    def transform(silver):
+        marks["transform"] = len(actions)
+        return aggregate_silver(silver)
+
+    write = layers.write_partitions
+
+    def marked_write(*a, **kw):
+        marks["write"] = len(actions)
+        return write(*a, **kw)
+
+    monkeypatch.setattr(pipeline, "aggregate_silver", transform)
+    monkeypatch.setattr(layers, "write_partitions", marked_write)
+    assert run_gold(spark, lake, full_refresh=True) == 8
+    assert actions[marks["transform"]:marks["write"]] == ["collect"]

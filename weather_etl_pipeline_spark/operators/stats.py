@@ -32,7 +32,13 @@ def _descale_sum(expr: str, d: int) -> str:
     read 0.66 vs 0.86 best / 0.79 vs 1.00 median on the corr moments,
     values bit-identical). Inputs must be non-negative — the repo-wide
     scaled_long FLOOR(x*10^d + 0.5D) half-up convention; quantities,
-    prices and event values all are."""
+    prices and event values all are.
+
+    A product term (``_xl * _yl``) is a LONG multiply before the
+    DECIMAL cast, so each scaled factor must stay under sqrt(2^63):
+    |scaled| < 3.03e9 (3,037,000,499), i.e. |x| < ~3.03e7 at d=2.
+    The fixtures sit far below it (l_extendedprice scales to ~1.05e7);
+    tests/test_scaled_long_domain.py pins both preconditions."""
     return (
         f"CAST(ROUND(SUM(CAST({expr} AS DECIMAL(38,0))) / {10**d}, 0)"
         " AS DOUBLE)"

@@ -4,14 +4,17 @@ The reference computes ``to_process = available − processed`` as a
 Python set difference over ``(city, date)`` tuples (reference
 ``silver.py:66-69``, ``gold.py:113-118``). Distributed form: LEFT ANTI
 join of the partition listing against the metadata table — Catalyst
-broadcasts the (tiny) processed side.
+broadcasts the (tiny) processed side — collected to the driver as the
+work-list (one row per pending partition).
 
 The follow-on divergence from the reference matters more: the
 reference loops over ``to_process`` one partition at a time
-(``silver.py:73``); here the work-list is joined back into ONE job
-(``filter_to_partitions``) so all new partitions clean/aggregate/write
-in a single distributed pass. At 100 TB that is the difference between
-N sequential scans and one.
+(``silver.py:73``); here the work-list becomes one literal partition
+predicate (``filter_to_partitions``) so all new partitions
+clean/aggregate/write in a single distributed pass that lists and
+reads only their files. At 100 TB that is the difference between N
+sequential scans, or one scan of the whole zone, and one scan of the
+new partitions.
 
 Partition columns are parameterized — the weather lake uses
 ``(city, date)``, an event lake just ``(event_date,)``.
@@ -21,40 +24,48 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
-DEFAULT_PARTITION_KEY = ("city", "date")
+_SQL_ESCAPES = str.maketrans({"\\": "\\\\", "'": "\\'"})
 
 
-def available_partitions(
-    zone_df: DataFrame, cols: Sequence[str] = DEFAULT_PARTITION_KEY
-) -> DataFrame:
-    """DISTINCT partition tuples over a zone scan — reference silver.py:8-12.
+def pending_partitions(
+    zone_df: DataFrame, processed: DataFrame | None, cols: Sequence[str]
+) -> list[Row]:
+    """The collected work-list: DISTINCT partition tuples of a zone scan
+    (reference silver.py:8-12) minus ``processed`` via broadcast
+    anti-join; every available tuple when ``processed`` is None.
 
-    On a partitioned lake this reads only partition columns, which
-    Catalyst serves from directory metadata (no data scan).
-    """
-    return zone_df.select(*cols).distinct()
-
-
-def pending_partitions(available: DataFrame, processed: DataFrame) -> DataFrame:
-    """available − processed via broadcast anti-join (on shared columns)."""
-    return available.join(
-        F.broadcast(processed), on=list(available.columns), how="left_anti"
-    )
+    The listing reads no column data, but Spark's metadata-only
+    optimization is off by default, so its scan still covers every file
+    of the zone. The result is one row per pending partition."""
+    todo = zone_df.select(*cols).distinct()
+    if processed is not None:
+        todo = todo.join(F.broadcast(processed), on=list(cols), how="left_anti")
+    return todo.collect()
 
 
 def filter_to_partitions(
-    zone_df: DataFrame,
-    partitions: DataFrame,
-    cols: Sequence[str] = DEFAULT_PARTITION_KEY,
+    zone_df: DataFrame, partitions: Sequence[Row], cols: Sequence[str]
 ) -> DataFrame:
-    """Restrict a zone scan to a partition work-list in ONE plan.
+    """Restrict a zone scan to a collected partition work-list in ONE plan.
 
-    A broadcast LEFT SEMI join on partition columns: Spark turns this
-    into dynamic partition pruning / pushed filters, so only the listed
-    partitions' files are read — the single-job replacement for the
-    reference's per-partition loop.
+    The work-list becomes a literal ``(c1, c2, ...) IN ((v1, v2, ...),
+    ...)`` predicate over partition columns only, each value cast from
+    its string form to its column's type. Spark puts it in the scan's
+    ``PartitionFilters``, so only the listed partitions are listed and
+    read, and no broadcast job runs. (The broadcast LEFT SEMI join this
+    replaces pruned nothing: dynamic partition pruning needs a
+    selective filter on the other join side, which a work-list relation
+    lacks, so the scan read every file of the zone.)
     """
-    return zone_df.join(F.broadcast(partitions), on=list(cols), how="left_semi")
+    types = {f.name: f.dataType.simpleString() for f in zone_df.schema}
+
+    def lit(v: object, c: str) -> str:
+        text = "NULL" if v is None else f"'{str(v).translate(_SQL_ESCAPES)}'"
+        return f"CAST({text} AS {types[c]})"
+
+    keys = ", ".join(f"`{c}`" for c in cols)
+    rows = (", ".join(lit(r[c], c) for c in cols) for r in partitions)
+    return zone_df.filter(f"({keys}) IN ({', '.join(f'({t})' for t in rows)})")

@@ -15,7 +15,12 @@ module extracts that control flow once, parameterized by:
 Execution contract (the scale-relevant part):
 - ONE distributed job covers every pending partition (no per-partition
   loop);
-- the work-list is a broadcast anti-join against the metadata table;
+- the work-list is a broadcast anti-join against the metadata table,
+  collected to the driver; the input scan is restricted to it by a
+  literal partition predicate, so only pending partitions are listed
+  and read (no predicate when every partition is pending);
+- every gate runs off ONE per-partition aggregate over the cached
+  output (one action, however many gates);
 - the write is dynamic-partition-overwrite (only touched partitions
   replaced);
 - metadata marks processed only after a successful write.
@@ -25,16 +30,13 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.parquet_io import scan_zone, write_partitions
-from .incremental import (
-    available_partitions,
-    filter_to_partitions,
-    pending_partitions,
-)
+from .incremental import filter_to_partitions, pending_partitions
 from .metadata import mark_processed_cols, processed_partitions_cols
 
 
@@ -42,7 +44,14 @@ class ValidationError(ValueError):
     """A validation gate failed (reference raises ValueError)."""
 
 
-Validation = Callable[[DataFrame, DataFrame], None]
+class Validation(NamedTuple):
+    """A gate: the per-partition aggregates it needs over the layer
+    output (``aggs``, aliased) and a driver-side ``check(stats, todo)``.
+    ``stats`` holds one row per produced partition (partition columns,
+    ``_rows`` and every gate's aggregates); ``todo`` is the work-list."""
+
+    check: Callable[[list[Row], list[Row]], None]
+    aggs: tuple[Column, ...] = ()
 
 
 @dataclass
@@ -54,31 +63,33 @@ class Layer:
 
 
 def require_all_partitions_nonempty(layer: Layer) -> Validation:
-    """Empty-partition gate: every pending partition must produce rows."""
+    """Empty-partition gate: every pending partition must produce rows.
 
-    def check(out: DataFrame, todo: DataFrame) -> None:
-        produced = out.select(*layer.partition_cols).distinct()
-        missing = todo.join(
-            produced, list(layer.partition_cols), "left_anti"
-        ).collect()
-        if missing:
-            bad = [tuple(str(r[c]) for c in layer.partition_cols) for r in missing]
+    A work-list tuple holding a NULL never counts as produced: NULL
+    equals nothing, as in a SQL anti-join of the work-list against the
+    output."""
+
+    def check(stats: list[Row], todo: list[Row]) -> None:
+        key = lambda r: tuple(r[c] for c in layer.partition_cols)  # noqa: E731
+        got = set(map(key, stats))
+        bad = [tuple(map(str, k)) for k in map(key, todo) if None in k or k not in got]
+        if bad:
             raise ValidationError(
                 f"layer {layer.name}: no rows produced for partitions {bad}"
             )
 
-    return check
+    return Validation(check)
 
 
 def require_no_nulls(col: str) -> Validation:
     """Null-aggregate gate (reference gold.py:53-59)."""
 
-    def check(out: DataFrame, todo: DataFrame) -> None:
-        n = out.filter(F.col(col).isNull()).count()
+    def check(stats: list[Row], todo: list[Row]) -> None:
+        n = sum(r[f"_nulls_{col}"] for r in stats)
         if n:
             raise ValidationError(f"{n} rows with NULL {col}")
 
-    return check
+    return Validation(check, (F.count_if(F.col(col).isNull()).alias(f"_nulls_{col}"),))
 
 
 def run_layer(
@@ -96,25 +107,24 @@ def run_layer(
         return 0  # missing-input guard (reference gold.py:26-28)
     src = scan_zone(spark, input_path)
     cols = list(layer.partition_cols)
-    available = available_partitions(src, cols)
-    processed = (
-        None
-        if full_refresh
-        else processed_partitions_cols(spark, meta_path, layer.name, cols)
-    )
-    todo = available if processed is None else pending_partitions(available, processed)
-    todo_rows = todo.collect()  # tiny: one row per pending partition
-    if not todo_rows:
+    processed = None
+    if not full_refresh:
+        processed = processed_partitions_cols(spark, meta_path, layer.name, cols)
+    todo = pending_partitions(src, processed, cols)  # tiny: one row per partition
+    if not todo:
         return 0
-    todo_df = spark.createDataFrame(todo_rows, todo.schema)
-
-    pending_input = filter_to_partitions(src, todo_df, cols)
-    out = layer.transform(pending_input).cache()
+    # full refresh or no metadata yet: every partition pends, no predicate
+    pending = src if processed is None else filter_to_partitions(src, todo, cols)
+    out = layer.transform(pending).cache()
     try:
-        for validation in layer.validations:
-            validation(out, todo_df)
+        if layer.validations:  # one action serves every gate
+            aggs = [a for v in layer.validations for a in v.aggs]
+            stats = out.groupBy(*cols).agg(F.count("*").alias("_rows"), *aggs).collect()
+            for validation in layer.validations:
+                validation.check(stats, todo)
         write_partitions(out, output_path, layer.partition_cols)
     finally:
         out.unpersist()
+    todo_df = spark.createDataFrame(todo, src.select(*cols).schema)
     mark_processed_cols(spark, meta_path, layer.name, todo_df, cols)
-    return len(todo_rows)
+    return len(todo)

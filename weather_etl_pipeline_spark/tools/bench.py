@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import time
 
 from ..registry import load_all
@@ -21,6 +22,40 @@ def _timed(fn) -> float:
     t0 = time.perf_counter()
     fn()
     return time.perf_counter() - t0
+
+
+def _git_head(repo_dir: str) -> str:
+    """Short HEAD of the checkout at ``repo_dir``; "unknown" outside git."""
+    try:
+        out = subprocess.run(
+            ["git", "-C", repo_dir, "rev-parse", "--short", "HEAD"],
+            capture_output=True,
+            text=True,
+            timeout=10,
+        )
+    except (OSError, subprocess.TimeoutExpired):
+        return "unknown"
+    return out.stdout.strip() or "unknown"
+
+
+def diagnostics(
+    spark, git_head: str, raw: dict, floor: float, engine_sec: float, context: dict
+) -> dict:
+    """The bench's diagnostics line: per-pass raw times, floor
+    accounting and fixture context, stamped with what the run ran on
+    (visible CPUs, Spark master and version, git head) so numbers taken
+    on different hosts or commits are never compared blind."""
+    return {
+        "diagnostics": "bench",
+        "passes": raw,
+        "floor_sec": round(floor, 3),
+        "engine_sec": round(engine_sec, 3),
+        "context": context,
+        "cpus": len(os.sched_getaffinity(0)),  # nproc
+        "master": spark.sparkContext.master,
+        "spark_version": spark.version,
+        "git_head": git_head,
+    }
 
 
 def main(repo_dir: str | None = None) -> None:
@@ -100,17 +135,9 @@ def main(repo_dir: str | None = None) -> None:
     # round 9's full-fat single line overflowed it ("parsed": null in
     # BENCH_r09.json). The LAST stdout line is the compact contract object
     # {metric, value, unit, queries, sf} and nothing else.
-    print(
-        json.dumps(
-            {
-                "diagnostics": "bench",
-                "passes": raw,
-                "floor_sec": round(floor, 3),
-                "engine_sec": round(total - floor * len(per_query), 3),
-                "context": context,
-            }
-        )
-    )
+    head = _git_head(repo_dir)
+    engine_sec = total - floor * len(per_query)
+    print(json.dumps(diagnostics(spark, head, raw, floor, engine_sec, context)))
     # append-only variance ledger (round-11 builder note #4): every
     # run's per-query bests PLUS the floor/ref context land in one
     # file, so adjudicating "is this +20% a regression or a host
@@ -118,22 +145,6 @@ def main(repo_dir: str | None = None) -> None:
     # fixed ref_job_sec column is the host-speed normalizer. Disable
     # with SPARK_GRAFT_NO_LEDGER=1 (e.g. throwaway experiments).
     if not os.environ.get("SPARK_GRAFT_NO_LEDGER"):
-        head = "unknown"
-        try:
-            import subprocess
-
-            head = (
-                subprocess.run(
-                    ["git", "-C", repo_dir, "rev-parse", "--short", "HEAD"],
-                    capture_output=True,
-                    text=True,
-                    timeout=10,
-                )
-                .stdout.strip()
-                or "unknown"
-            )
-        except Exception:
-            pass
         with open(os.path.join(repo_dir, "BENCH_LEDGER.jsonl"), "a") as f:
             f.write(
                 json.dumps(
