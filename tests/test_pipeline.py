@@ -519,3 +519,115 @@ def test_gold_gates_run_in_one_action(spark, lake, monkeypatch):
     monkeypatch.setattr(layers, "write_partitions", marked_write)
     assert run_gold(spark, lake, full_refresh=True) == 8
     assert actions[marks["transform"]:marks["write"]] == ["collect"]
+
+
+def test_file_index_work_list_decodes_escaped_partition_values(spark, tmp_path):
+    """The work-list parsed from the zone's file index equals the
+    partition tuples Spark itself reads back, for string values Spark
+    escapes in directory names (and the URI escapes again), NULL and
+    ``""`` (both stored as the Hive default partition) and int, date
+    and timestamp partition columns."""
+    from weather_etl_pipeline_spark.plans.incremental import pending_partitions
+
+    strings = ["a b", "a%b", "x/y", "k=v", "t:u", "q?#", "Zürich", "50%20",
+               "o'k\\", "", None]
+    rows = [
+        (i, s, i % 3, dt.date(2026, 1, 1 + i % 2),
+         dt.datetime(2026, 1, 1, 10, i % 2, 30))
+        for i, s in enumerate(strings)
+    ]
+    cols = ["s", "n", "d", "ts"]
+    df = spark.createDataFrame(rows, "x int, s string, n int, d date, ts timestamp")
+    df.write.partitionBy(*cols).parquet(str(tmp_path / "zone"))
+    zone = spark.read.parquet(str(tmp_path / "zone"))
+    assert [zone.schema[c].dataType.simpleString() for c in cols] == [
+        "string", "int", "date", "timestamp"]
+
+    want = {tuple(r) for r in zone.select(*cols).distinct().collect()}
+    assert len(want) == len(strings)
+    assert sum(t[0] is None for t in want) == 2  # "" reads back as NULL
+    assert {tuple(r) for r in pending_partitions(zone, set(), cols)} == want
+    done = {("a%b", 1, dt.date(2026, 1, 2), dt.datetime(2026, 1, 1, 10, 1, 30))}
+    assert {tuple(r) for r in pending_partitions(zone, done, cols)} == want - done
+
+
+def _jobs_during(spark, fn, *args, **kwargs):
+    """``fn(*args, **kwargs)`` and the stage names of the Spark jobs it
+    ran, one list per job."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn(*args, **kwargs)
+    names = [
+        [tracker.getStageInfo(s).name for s in tracker.getJobInfo(j).stageIds]
+        for j in sorted(set(tracker.getJobIdsForGroup(None)) - before)
+    ]
+    return out, names
+
+
+def test_layer_bookkeeping_job_counts(spark, lake, monkeypatch):
+    """On a lake with metadata, an incremental layer run lists its
+    work-list with no Spark job, reads the processed keys in one
+    collect (no schema inference job) and upserts the metadata in one
+    job whose merge plan has no shuffle."""
+    from weather_etl_pipeline_spark.plans import layers, metadata
+    from weather_etl_pipeline_spark.sources.parquet_io import append_partitions
+
+    run_pipeline(spark, lake, bronze_df=make_bronze(spark))
+    append_partitions(make_bronze(spark, dates=("2026-02-15",)), lake.bronze)
+    seen = {}
+
+    def spy(module, name):
+        fn = getattr(module, name)
+
+        def wrapped(*a, **kw):
+            out, seen[name] = _jobs_during(spark, fn, *a, **kw)
+            return out
+
+        monkeypatch.setattr(module, name, wrapped)
+
+    spy(layers, "processed_partitions_cols")
+    spy(layers, "pending_partitions")
+    spy(metadata, "upsert_metadata_cols")
+    merges = []
+    swap = metadata._atomic_overwrite
+
+    def record_merge(df, path):
+        merges.append(df)
+        return swap(df, path)
+
+    monkeypatch.setattr(metadata, "_atomic_overwrite", record_merge)
+    assert run_silver(spark, lake) == 4
+    assert seen["pending_partitions"] == []
+    [[read]] = seen["processed_partitions_cols"]
+    assert read.startswith("collect at ")
+    assert len(seen["upsert_metadata_cols"]) == 1
+    [merge] = merges
+    assert "Exchange" not in merge._jdf.queryExecution().executedPlan().toString()
+    meta = read_metadata(spark, lake.metadata)
+    assert meta.filter("layer = 'silver'").count() == 4 * 3
+
+
+def test_zero_row_partition_file_fails_empty_partition_gate(spark, lake):
+    """A partition is available once it has a data file: a partition
+    directory holding only a zero-row file enters the work-list and
+    the empty-partition gate fails it by name, with nothing written and
+    nothing marked (it used to be skipped, silently and forever)."""
+    from weather_etl_pipeline_spark.sources.parquet_io import append_partitions
+
+    append_partitions(make_bronze(spark, dates=("2026-02-13",)), lake.bronze)
+    assert run_silver(spark, lake) == 4
+    empty = make_bronze(spark, cities=["Paris"], dates=("2026-02-14",)).limit(0)
+    part = os.path.join(lake.bronze, "city=Paris", "date=2026-02-14")
+    empty.drop("city", "date").write.parquet(part)
+    assert any(f.endswith(".parquet") for f in os.listdir(part))
+    silver_before = _zone_snapshot(lake.silver)
+    meta_before = sorted(map(tuple, read_metadata(spark, lake.metadata).collect()))
+    with pytest.raises(
+        ValidationError,
+        match=r"^layer silver: no rows produced for partitions "
+        r"\[\('Paris', '2026-02-14'\)\]$",
+    ):
+        run_silver(spark, lake)
+    assert _zone_snapshot(lake.silver) == silver_before
+    meta_after = sorted(map(tuple, read_metadata(spark, lake.metadata).collect()))
+    assert meta_after == meta_before

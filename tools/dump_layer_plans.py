@@ -9,13 +9,15 @@ full-refresh gold again while recording:
   silver transform (the pending-partition scan);
 - ``silver_gates.txt`` / ``gold_gates.txt``: every DataFrame action the
   layer issues between its transform and its write (the validation
-  gates), one plan per action.
+  gates), one plan per action;
+- ``metadata_merge.txt``: the plan the incremental silver run's
+  metadata upsert writes (the merged, keep-latest table).
 
 Expression IDs, exchange plan_ids and the temp dir are stripped
 (``$LAKE``) as in tools/dump_plans.py.
 
 Usage: python tools/dump_layer_plans.py <out_dir>
-e.g.   python tools/dump_layer_plans.py plans/r17/after
+e.g.   python tools/dump_layer_plans.py plans/r18/after
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ if _REPO not in sys.path:
 
 from dump_plans import _IDS  # noqa: E402
 
-from weather_etl_pipeline_spark.plans import layers, pipeline  # noqa: E402
+from weather_etl_pipeline_spark.plans import layers, metadata, pipeline  # noqa: E402
 from weather_etl_pipeline_spark.session import get_spark  # noqa: E402
 from weather_etl_pipeline_spark.sources.parquet_io import (  # noqa: E402
     append_partitions,
@@ -101,7 +103,15 @@ def main() -> None:
         recording[0] = False
         return write(*a, **kw)
 
+    swap = metadata._atomic_overwrite
+    merges: list[str] = []
+
+    def record_merge(df, path):
+        merges.append(explain(df))
+        return swap(df, path)
+
     layers.write_partitions = stop_at_write
+    metadata._atomic_overwrite = record_merge
     for name in originals:
         setattr(cls, name, record(name))
     clean, aggregate = pipeline.clean_bronze, pipeline.aggregate_silver
@@ -115,10 +125,12 @@ def main() -> None:
             gates.clear()
             print(f"{label}: {run()} partitions, {len(gates)} gate action(s)")
             (out_dir / f"{label}_gates.txt").write_text("\n".join(gates))
+        (out_dir / "metadata_merge.txt").write_text(merges[0])  # silver's upsert
     finally:
         for name, fn in originals.items():
             setattr(cls, name, fn)
         layers.write_partitions = write
+        metadata._atomic_overwrite = swap
         pipeline.clean_bronze, pipeline.aggregate_silver = clean, aggregate
         shutil.rmtree(root, ignore_errors=True)
     spark.stop()

@@ -15,10 +15,11 @@ module extracts that control flow once, parameterized by:
 Execution contract (the scale-relevant part):
 - ONE distributed job covers every pending partition (no per-partition
   loop);
-- the work-list is a broadcast anti-join against the metadata table,
-  collected to the driver; the input scan is restricted to it by a
+- the work-list is the zone's partition tuples, parsed from its file
+  index, minus the layer's keys collected from the metadata table (one
+  job, plans/incremental.py); the input scan is restricted to it by a
   literal partition predicate, so only pending partitions are listed
-  and read (no predicate when every partition is pending);
+  and read (no predicate when nothing is processed yet);
 - every gate runs off ONE per-partition aggregate over the cached
   output (one action, however many gates);
 - the write is dynamic-partition-overwrite (only touched partitions
@@ -36,7 +37,7 @@ from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.parquet_io import scan_zone, write_partitions
-from .incremental import filter_to_partitions, pending_partitions
+from .incremental import filter_to_partitions, partitions_relation, pending_partitions
 from .metadata import mark_processed_cols, processed_partitions_cols
 
 
@@ -107,14 +108,15 @@ def run_layer(
         return 0  # missing-input guard (reference gold.py:26-28)
     src = scan_zone(spark, input_path)
     cols = list(layer.partition_cols)
-    processed = None
+    processed = set()
     if not full_refresh:
-        processed = processed_partitions_cols(spark, meta_path, layer.name, cols)
+        keys = src.select(*cols).schema
+        processed = processed_partitions_cols(spark, meta_path, layer.name, keys)
     todo = pending_partitions(src, processed, cols)  # tiny: one row per partition
     if not todo:
         return 0
-    # full refresh or no metadata yet: every partition pends, no predicate
-    pending = src if processed is None else filter_to_partitions(src, todo, cols)
+    # nothing processed yet (or full refresh): every partition pends
+    pending = filter_to_partitions(src, todo, cols) if processed else src
     out = layer.transform(pending).cache()
     try:
         if layer.validations:  # one action serves every gate
@@ -125,6 +127,6 @@ def run_layer(
         write_partitions(out, output_path, layer.partition_cols)
     finally:
         out.unpersist()
-    todo_df = spark.createDataFrame(todo, src.select(*cols).schema)
+    todo_df = partitions_relation(src, todo, cols)
     mark_processed_cols(spark, meta_path, layer.name, todo_df, cols)
     return len(todo)

@@ -10,7 +10,9 @@ the upsert is replicated as read → union → keep-latest-per-key →
 atomic swap:
 
 - keep-latest = ``row_number() over (partition by key order by
-  processed_at desc)`` — deterministic replace-by-key;
+  processed_at desc)`` — deterministic replace-by-key, computed in one
+  task (the table is read with the new rows' schema, so no schema
+  inference job runs either: an upsert is one Spark job);
 - atomic swap = write to a temp dir then rename, so a crashed writer
   never leaves a half-written metadata table;
 - the table is tiny (one row per (layer, *partition) — thousands at
@@ -29,15 +31,27 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
 from ..schemas import METADATA_KEY, PIPELINE_METADATA
 from ..sources.fs import delete, path_exists, rename
 
 
 def read_metadata(spark: SparkSession, meta_path: str) -> DataFrame | None:
+    """The table with the schema its files declare, None if no table
+    exists yet. Inferring that schema is a Spark job, so the pipeline's
+    own reads name the schema instead (``_read_as``)."""
     if not path_exists(spark, meta_path):
         return None
     return spark.read.parquet(meta_path)
+
+
+def _read_as(
+    spark: SparkSession, meta_path: str, schema: StructType
+) -> DataFrame | None:
+    if not path_exists(spark, meta_path):
+        return None
+    return spark.read.schema(schema).parquet(meta_path)
 
 
 def upsert_metadata_cols(
@@ -59,17 +73,16 @@ def upsert_metadata_cols(
     suite pins both modes)."""
 
     def _merge_and_swap(fence=None) -> None:
-        current = read_metadata(spark, meta_path)
-        merged = (
-            current.unionByName(new_rows.select(*current.columns))
-            if current is not None
-            else new_rows
-        )
+        current = _read_as(spark, meta_path, new_rows.schema)
+        merged = current.unionByName(new_rows) if current is not None else new_rows
         w = Window.partitionBy("layer", *key_cols).orderBy(
             F.col("processed_at").desc()
         )
+        # one row per key: one task merges it, and the single partition
+        # satisfies the window's distribution, so no shuffle runs
         deduped = (
-            merged.withColumn("_rn", F.row_number().over(w))
+            merged.coalesce(1)
+            .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
@@ -106,14 +119,17 @@ def mark_processed_cols(
 
 
 def processed_partitions_cols(
-    spark: SparkSession, meta_path: str, layer: str, cols: list[str]
-) -> DataFrame | None:
-    """Partition tuples already processed for a layer (None if no table
-    exists yet) — reference silver.py:15-20."""
-    meta = read_metadata(spark, meta_path)
+    spark: SparkSession, meta_path: str, layer: str, keys: StructType
+) -> set[tuple]:
+    """Partition tuples already processed for a layer, collected in one
+    job (empty if no table exists yet) — reference silver.py:15-20.
+    ``keys`` types the partition columns as the layer's zone does."""
+    schema = StructType([StructField("layer", StringType()), *keys])
+    meta = _read_as(spark, meta_path, schema.add("processed_at", TimestampType()))
     if meta is None:
-        return None
-    return meta.filter(F.col("layer") == layer).select(*cols)
+        return set()
+    rows = meta.filter(F.col("layer") == layer).select(*keys.fieldNames()).collect()
+    return set(map(tuple, rows))
 
 
 # --- weather-shaped wrappers (the reference's fixed schema) ------------------
@@ -144,19 +160,6 @@ def mark_processed(
         F.current_timestamp().alias("processed_at"),
     )
     upsert_metadata(spark, meta_path, rows)
-
-
-def processed_partitions(
-    spark: SparkSession, meta_path: str, layer: str
-) -> DataFrame:
-    got = processed_partitions_cols(spark, meta_path, layer, ["city", "date"])
-    if got is None:
-        return _empty_weather_partitions(spark)
-    return got
-
-
-def _empty_weather_partitions(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], "city string, date date")
 
 
 def _atomic_overwrite(df: DataFrame, path: str) -> None:
